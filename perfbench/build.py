@@ -16,9 +16,12 @@ import sys
 
 # C1 only: one run is far too short for C2 to reach a steady state, and its
 # background compilation on the same cores as Spark's task threads made the
-# run-to-run spread several times wider. No perf-data file: the benchmark
-# writes nothing outside its checkout.
-JVM_OPTS = ["-Xmx3g", "-XX:TieredStopAtLevel=1", "-XX:-UsePerfData"]
+# run-to-run spread several times wider. C1-only mode shrinks the code cache
+# to 48 MB, which the code Spark generates for the operator queries fills:
+# the JVM then stops compiling, or fails a task outright, so the cache is
+# set back to its usual size. No perf-data file: the benchmark writes
+# nothing outside its checkout.
+JVM_OPTS = ["-Xmx3g", "-XX:TieredStopAtLevel=1", "-XX:ReservedCodeCacheSize=240m", "-XX:-UsePerfData"]
 JVM_OPENS = [x for p in [
     "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net", "java.nio",
     "java.util", "java.util.concurrent", "java.util.concurrent.atomic", "sun.nio.ch",

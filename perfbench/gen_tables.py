@@ -47,6 +47,15 @@ def _money(rng, lo, hi, n):
     return np.round(rng.uniform(lo, hi, n), 2)
 
 
+def _bursts(offsets_us, day_us):
+    """Folds offsets spread over 30 days into ten five-minute bursts three
+    days apart, sorted: dense enough that a click falls in a view's
+    one-minute window (q_range_join) even at the smallest scale factor, with
+    the half-hour gaps that close sessions (q_stream_sessions)."""
+    burst_us = 300 * 10**6
+    return np.sort((offsets_us // burst_us) % 10 * 3 * day_us + offsets_us % burst_us)
+
+
 def write_tables(out_dir, sf, gen_seed):
     """Write every query table for scale factor `sf` into `out_dir`."""
     os.makedirs(out_dir, exist_ok=True)
@@ -102,7 +111,7 @@ def write_tables(out_dir, sf, gen_seed):
         "l_shipdate": _ts("1995-01-02", rng.integers(0, 2499, n_line) * day_us)})
     _write(out_dir, "events", {
         "event_id": np.arange(n_ev, dtype=np.int64),
-        "ts": _ts("2024-01-01", np.sort(rng.integers(0, 30 * day_us, n_ev))),
+        "ts": _ts("2024-01-01", _bursts(rng.integers(0, 30 * day_us, n_ev), day_us)),
         "user_id": rng.integers(0, n_user, n_ev),
         "event_type": rng.choice(EVENT_TYPES, n_ev),
         "value": np.maximum(np.round(rng.exponential(50.0, n_ev), 2), 0.01),

@@ -13,6 +13,7 @@ else — per-query, per-node and span detail, ambient load — goes to the
 artifact `.bench_build/artifacts/<workload>-s<seed>-t<trace>.json`.
 """
 import argparse
+import hashlib
 import json
 import os
 import resource
@@ -40,7 +41,9 @@ DEADLINE_S = 170
 
 
 def tables(name, sf):
-    d = os.path.join(OUT, "data", f"{name}-sf{sf}-g{GEN_SEED}")
+    with open(gen_tables.__file__, "rb") as f:
+        version = hashlib.sha256(f.read()).hexdigest()[:8]
+    d = os.path.join(OUT, "data", f"{name}-sf{sf}-g{GEN_SEED}-{version}")
     done = os.path.join(d, ".done")
     if not os.path.exists(done):
         shutil.rmtree(d, ignore_errors=True)
@@ -112,6 +115,7 @@ def main():
                 "--trace", str(a.trace), "--data", data, "--work", work, "--out", raw_path,
                 "--goldens", goldens] + (["--record"] if a.record_goldens else []))
         before = ambient()
+        launched = time.time()
         with open(os.path.join(arts, name + ".log"), "w") as log:
             budget = max(30.0, DEADLINE_S - (time.time() - t_start))
             r = subprocess.run(cmd, stdout=log, stderr=subprocess.STDOUT, timeout=budget, cwd=work)
@@ -120,6 +124,7 @@ def main():
             sys.exit(f"benchmark JVM failed with exit code {r.returncode}; see {arts}/{name}.log")
         with open(raw_path) as f:
             raw = json.load(f)
+        raw["launched_epoch_s"] = launched
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

@@ -7,11 +7,12 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark process: builds the engine's session profile, sets it up
-  * several times, warms the workload up untimed, then runs it as a closed
-  * loop with one client until `--seconds` have passed, and writes every raw
-  * measurement to one JSON file (`--out`). Statistics and the printed result
-  * line are made from that file by `run.py`.
+/** Benchmark process: builds the engine's session profile, warms the
+  * workload up untimed, then runs it as a closed loop with one client until
+  * the units of work the hypervisor did not steal from add up to
+  * `--seconds`, and writes every raw measurement to one JSON file (`--out`).
+  * Statistics and the printed result line are made from that file by
+  * `run.py`.
   *
   * Usage: perfbench.Main --workload W --seed N --seconds S --trace 0|1
   *          --data DIR --work DIR --out FILE [--goldens FILE] [--record]
@@ -25,7 +26,14 @@ object Main {
   /** Spark cores: fixed, so partitioning — and with it every approximate
     * operator's answer — is the same on every machine. */
   val Cores = 4
-  val SetupRepeats = 3
+  /** A unit of work during which the hypervisor stole more than this share
+    * of the machine's CPU time is redone and left out of the medians. The
+    * benchmark's own threads cannot cause steal, so this gate cannot trip
+    * on the load the benchmark itself creates. */
+  val MaxStealFrac = 0.05
+  /** The loop stops after this many times `--seconds` even if too few
+    * units were clean; the medians then fall back to every unit. */
+  val MaxLoopFactor = 3.0
 
   def parse(args: Array[String]): Conf = {
     val m = args.sliding(2, 2).collect { case Array(k, v) if k.startsWith("--") => k.drop(2) -> v }.toMap
@@ -53,12 +61,6 @@ object Main {
     s
   }
 
-  def stop(s: SparkSession): Unit = {
-    s.stop()
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-  }
-
   def main(args: Array[String]): Unit = {
     val c = parse(args)
     val w: Workload = c.workload match {
@@ -68,49 +70,50 @@ object Main {
       case other => throw new IllegalArgumentException(s"unknown workload '$other'")
     }
     val rec = new Recorder
-    // set-up: session build plus the workload's engine initialisation,
-    // repeated; the median is reported
-    var spark: SparkSession = null
-    val setups = (1 to SetupRepeats).map { _ =>
-      if (spark != null) stop(spark)
-      val t0 = System.nanoTime()
-      spark = session(c)
-      w.init(spark)
-      (System.nanoTime() - t0) / 1e9
-    }
+    // set-up, once and cold: session build plus the workload's engine
+    // initialisation, then the untimed warm-up; `run.py` times set-up from
+    // the JVM's launch to `first_unit_epoch_ms`
     val t0 = System.nanoTime()
+    val spark = session(c)
+    w.init(spark)
+    val sessionInit = (System.nanoTime() - t0) / 1e9
+    val t1 = System.nanoTime()
     w.warmup(spark)
-    val warmup = (System.nanoTime() - t0) / 1e9
+    val warmup = (System.nanoTime() - t1) / 1e9
 
+    val firstUnitEpochMs = System.currentTimeMillis()
     val jvm = JvmWindow.start()
-    // the loop's clock counts the units only, not the untimed checks after
-    // each, so the number of units a run makes does not depend on them; a
-    // traced run measures at least two units, so that every operation also
-    // runs untraced and the tracing overhead can be read off
+    // the loop's clock counts the clean units only, not the untimed work
+    // between them, so the number of units a run makes does not depend on
+    // it; a traced run measures at least two units, so that every
+    // operation also runs untraced and the tracing overhead can be read off
     val minUnits = if (c.trace) 2 else 1
+    val loopStart = Trace.now()
+    def overtime = (Trace.now() - loopStart) / 1e9 >= MaxLoopFactor * c.seconds
     var unit = 0
-    while (unit < minUnits || rec.unitSeconds < c.seconds) {
+    while (unit < minUnits || (rec.cleanSeconds < c.seconds && !overtime)) {
       w.unit(spark, unit, rec)
       unit += 1
     }
-    val measured = rec.unitSeconds
+    val measured = rec.cleanSeconds
     val jvmStats = jvm.stop()
     w.finish(spark, rec)
     if (c.trace) org.apache.spark.SparkBus.drain(spark.sparkContext)
     val expr = if (c.trace) ExprBench.run(c) else Map.empty[String, Double]
     val out = Map[String, Any](
       "workload" -> c.workload, "seed" -> c.seed, "cores" -> c.cores, "trace" -> c.trace,
-      "setup_s" -> setups, "warmup_s" -> warmup, "measured_s" -> measured,
+      "session_s" -> sessionInit, "warmup_s" -> warmup, "first_unit_epoch_ms" -> firstUnitEpochMs,
+      "measured_s" -> measured, "max_steal_frac" -> MaxStealFrac,
       "peak_rss_mb" -> JvmWindow.vmHwmMb(), "jvm" -> jvmStats, "expr" -> expr) ++ rec.json ++
       (if (c.trace) TraceDump.json() else Map.empty)
     Json.writeFile(c.out, out)
-    stop(spark)
+    spark.stop()
   }
 }
 
-/** A workload: engine initialisation (timed as set-up), an untimed warm-up,
-  * one unit of measured work (a pass over the queries, one pipeline run, one
-  * refresh round), and the final output checks. */
+/** A workload: engine initialisation and an untimed warm-up (both timed
+  * as set-up), one unit of measured work (a pass over the queries, one
+  * pipeline run, one refresh round), and the final output checks. */
 trait Workload {
   def init(spark: SparkSession): Unit
   def warmup(spark: SparkSession): Unit
@@ -129,13 +132,26 @@ class Recorder {
   var attempted = 0L
   var failed = 0L
 
-  def unitSeconds: Double =
-    units.map(u => u("end").asInstanceOf[Long] - u("start").asInstanceOf[Long]).sum / 1e9
+  /** Summed time of the units during which little CPU time was stolen. */
+  def cleanSeconds: Double = synchronized {
+    units.filter(_("clean") == true)
+      .map(u => u("end").asInstanceOf[Long] - u("start").asInstanceOf[Long]).sum / 1e9
+  }
 
-  /** One measured unit: its span, the CPU time the process used in it,
-    * and its input rows. */
-  def unit(start: Long, end: Long, cpuNs: Long, rows: Long, traced: Boolean): Unit = synchronized {
-    units += Map("start" -> start, "end" -> end, "cpu_ns" -> cpuNs, "rows" -> rows, "traced" -> traced)
+  /** The start of a measured unit: clock, process CPU time, machine steal. */
+  def begin(): Recorder.Mark = Recorder.Mark(Trace.now(), Recorder.cpuNow(), Steal.sample())
+
+  /** One measured unit, from `m` to now: its span, the CPU time the process
+    * used in it, the share of the machine's CPU time stolen in it, and its
+    * input rows. */
+  def unit(m: Recorder.Mark, rows: Long, traced: Boolean): Unit = {
+    val end = Trace.now()
+    val cpu = Recorder.cpuNow() - m.cpu
+    val steal = Steal.frac(m.steal, Steal.sample())
+    synchronized {
+      units += Map("start" -> m.t, "end" -> end, "cpu_ns" -> cpu, "rows" -> rows, "traced" -> traced,
+        "steal_frac" -> steal, "clean" -> (steal <= Main.MaxStealFrac))
+    }
   }
 
   def count(k: String, v: Double): Unit = synchronized { counters(k) = counters.getOrElse(k, 0.0) + v }
@@ -178,9 +194,27 @@ class Recorder {
 }
 
 object Recorder {
+  final case class Mark(t: Long, cpu: Long, steal: (Long, Long))
+
   /** CPU time all threads of this process have used, ns. */
   def cpuNow(): Long = ManagementFactory.getOperatingSystemMXBean
     .asInstanceOf[com.sun.management.OperatingSystemMXBean].getProcessCpuTime
+}
+
+/** Stolen CPU time of the whole machine, from the first line of
+  * `/proc/stat`: (steal, total) jiffies over every CPU. */
+object Steal {
+  def sample(): (Long, Long) = {
+    val f = scala.io.Source.fromFile("/proc/stat")
+    try {
+      val v = f.getLines().next().trim.split("\\s+").slice(1, 9).map(_.toLong)
+      (if (v.length > 7) v(7) else 0L, v.sum)
+    } finally f.close()
+  }
+
+  /** Share of the CPU time between two samples that was stolen. */
+  def frac(a: (Long, Long), b: (Long, Long)): Double =
+    if (b._2 > a._2) (b._1 - a._1).toDouble / (b._2 - a._2) else 0.0
 }
 
 /** JVM heap, GC and JIT activity over the measured window. */

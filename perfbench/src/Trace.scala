@@ -135,14 +135,16 @@ object Phases {
   @volatile var root: SparkSession = _
 }
 
+/** Records every action of a traced run, whatever its time: the listener
+  * bus delivers the callbacks asynchronously, often after the traced window
+  * of the action has closed. The statistics clip the phases to the windows. */
 class PhaseListener extends QueryExecutionListener {
-  private def record(qe: QueryExecution): Unit =
-    if (Trace.enabled) {
-      val ph = qe.tracker.phases.map { case (k, v) =>
-        k -> ((Trace.fromEpochMs(v.startTimeMs), Trace.fromEpochMs(v.endTimeMs)))
-      }
-      Phases.actions.add(Phases.Action(ph, qe.sparkSession ne Phases.root))
+  private def record(qe: QueryExecution): Unit = {
+    val ph = qe.tracker.phases.map { case (k, v) =>
+      k -> ((Trace.fromEpochMs(v.startTimeMs), Trace.fromEpochMs(v.endTimeMs)))
     }
+    Phases.actions.add(Phases.Action(ph, qe.sparkSession ne Phases.root))
+  }
   override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = record(qe)
   override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = record(qe)
 }
@@ -215,6 +217,14 @@ object Files {
         .map(java.nio.file.Files.size).sum
       finally s.close()
     }
+  }
+
+  /** Copies the directory tree `from` to `to`, which must not exist. */
+  def copyTree(from: String, to: String): Unit = {
+    val (src, dst) = (java.nio.file.Paths.get(from), java.nio.file.Paths.get(to))
+    val s = java.nio.file.Files.walk(src)
+    try s.iterator().asScala.foreach(p => java.nio.file.Files.copy(p, dst.resolve(src.relativize(p))))
+    finally s.close()
   }
 
   def deleteTree(path: String): Unit = {

@@ -66,8 +66,7 @@ class Operators(c: Conf) extends Workload {
   }
 
   def unit(spark: SparkSession, index: Int, rec: Recorder): Unit = {
-    val t0 = Trace.now()
-    val cpu0 = Recorder.cpuNow()
+    val m = rec.begin()
     order(index).foreach { name =>
       val traced = c.trace && (index + rank(name)) % 2 == 0
       val s = Trace.now()
@@ -83,7 +82,7 @@ class Operators(c: Conf) extends Workload {
       }
       rec.step(name, index, s, e, ok, traced)
     }
-    rec.unit(t0, Trace.now(), Recorder.cpuNow() - cpu0, inputRows, traced = false)
+    rec.unit(m, inputRows, traced = false)
   }
 
   override def finish(spark: SparkSession, rec: Recorder): Unit =
@@ -94,11 +93,51 @@ object Operators {
   val Tables = Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem",
     "events", "documents", "embeddings")
 
-  /** Every seventh query in name order: a fixed share of the suite, spread
-    * over all query families, small enough for a warm-up pass and two
-    * measured passes in one run. */
-  def select(all: Seq[String]): IndexedSeq[String] =
-    all.sorted.zipWithIndex.collect { case (n, i) if i % 7 == 0 => n }.toIndexedSeq
+  /** A query family: the name prefixes of its queries and the queries that
+    * stand for it in the measured set. */
+  final case class Family(name: String, prefixes: Seq[String], picks: Seq[String])
+
+  /** Every query of the suite belongs to the first family with a matching
+    * prefix. The `dag` family holds the three queries that run an EtlGroup
+    * over a Catalog, so the set reaches those layers too; every other
+    * family has one query in the set. */
+  val Families: Seq[Family] = Seq(
+    Family("dag", Seq("q_metagraph_", "q_asof_dag", "q_dedup_rewrite"),
+      Seq("q_metagraph_whole", "q_asof_dag", "q_dedup_rewrite")),
+    Family("aggregate", Seq("q_agg_", "q_group_", "q_topk_", "q_distinct_", "q_top1_", "q_license_",
+      "q_pivot"), Seq("q_agg_cube")),
+    Family("join", Seq("q_join_", "q_semi_", "q_anti_", "q_intersect", "q_skew_"), Seq("q_join_nway")),
+    Family("range", Seq("q_range_"), Seq("q_range_join")),
+    Family("asof", Seq("q_asof_"), Seq("q_asof_join")),
+    Family("set", Seq("q_union"), Seq("q_union_all")),
+    Family("window", Seq("q_window_", "q_sessionize"), Seq("q_window_rownum")),
+    Family("stream", Seq("q_stream_"), Seq("q_stream_sessions")),
+    Family("scan", Seq("q_filters", "q_limit", "q_concat_"), Seq("q_filters")),
+    Family("er", Seq("q_er_"), Seq("q_er_features")),
+    Family("graph", Seq("q_graph_"), Seq("q_graph_grouping")),
+    Family("dedup", Seq("q_dedup_"), Seq("q_dedup_semantic")),
+    Family("ann", Seq("q_ann_"), Seq("q_ann_ivfpq")),
+    Family("text", Seq("q_text_", "q_decontam", "q_clean_", "q_sentence_"), Seq("q_text_quality")),
+    Family("corpus", Seq("q_sample_", "q_pack_", "q_vocab_", "q_mix_", "q_chunk_", "q_heavy_"),
+      Seq("q_mix_budget")),
+    Family("multimodal", Seq("q_multimodal_"), Seq("q_multimodal_wav")),
+    Family("json", Seq("q_json_"), Seq("q_json_array")),
+    Family("hash", Seq("q_partition_", "q_hash_", "q_zorder_"), Seq("q_hash_ids")),
+    Family("crawl", Seq("q_crawl_", "q_cache_"), Seq("q_crawl_incremental")))
+
+  def familyOf(query: String): Option[Family] = Families.find(_.prefixes.exists(query.startsWith))
+
+  /** The measured set: every family's picks. Fails unless every query of
+    * the suite falls in a family and every pick is a query of its own
+    * family, so a query added under a new prefix is not silently left out. */
+  def select(all: Seq[String]): IndexedSeq[String] = {
+    val orphans = all.filter(familyOf(_).isEmpty)
+    require(orphans.isEmpty, s"queries in no family: ${orphans.sorted.mkString(", ")}")
+    val picks = Families.flatMap(f => f.picks.map(f -> _))
+    val wrong = picks.collect { case (f, q) if !all.contains(q) || !familyOf(q).contains(f) => q }
+    require(wrong.isEmpty, s"picks that are not queries of their family: ${wrong.mkString(", ")}")
+    picks.map(_._2).sorted.toIndexedSeq
+  }
 }
 
 /** Shared DAG plumbing: wrap nodes, run the group under spans, record the
@@ -175,10 +214,9 @@ class Flagship(c: Conf) extends Workload {
     last = None
     val traced = c.trace && index % 2 == 0
     val cat = new TimedCatalog(spark, dir(index))
-    val t0 = Trace.now()
-    val cpu0 = Recorder.cpuNow()
+    val m = rec.begin()
     val result = rec.window(traced, s"flagship run $index")(Try(pipeline(in, cat, index, rec, traced)))
-    rec.unit(t0, Trace.now(), Recorder.cpuNow() - cpu0, inputRows, traced)
+    rec.unit(m, inputRows, traced)
     result match {
       case Failure(e) => rec.fail(s"flagship run $index", e); rec.check("flagship run completes", false)
       case Success(_) =>
@@ -218,18 +256,25 @@ object Flagship {
       regexp_replace(col("product"), "_[a-z]{6}", "").as("product"), col("count"))
 }
 
-/** `refresh`: the reference's crawl → tabularize layer over rounds. A
-  * seeded generator keeps PyPI-shaped `latest` JSON files in a
-  * LocalFsSource directory; each round it changes, deletes and adds keys,
-  * then one EtlGroup runs the CrawlNode and three tabularize DfNodes. */
+/** `refresh`: the reference's crawl → tabularize layer. A seeded generator
+  * keeps PyPI-shaped `latest` JSON files in a LocalFsSource directory. The
+  * warm-up crawls them and runs refresh rounds, then saves the catalog and
+  * the source as the starting state. Every unit starts from that state: the
+  * generator changes, deletes and adds a fixed number of keys, then one
+  * EtlGroup runs the CrawlNode and three tabularize DfNodes. So every unit
+  * probes the same number of keys and copies a snapshot of the same size,
+  * however many units a run reaches. */
 class Refresh(c: Conf) extends Workload {
   private val src = s"${c.work}/refresh_src"
+  private val catDir = s"${c.work}/refresh_cat"
+  private val savedDir = s"${c.work}/refresh_saved"
   private val model = new PypiModel(c.seed, src)
+  private var start: PypiModel.State = _
   private var cat: TimedCatalog = _
   private var source: TimedSource = _
 
   def init(spark: SparkSession): Unit = {
-    cat = new TimedCatalog(spark, s"${c.work}/refresh_cat")
+    cat = new TimedCatalog(spark, catDir)
     val sc = spark.sparkContext
     source = TimedSource(LocalFsSource(src), sc.longAccumulator("fetch_calls"),
       sc.longAccumulator("fetch_ns"), sc.longAccumulator("fetch_changed"))
@@ -252,16 +297,20 @@ class Refresh(c: Conf) extends Workload {
       model.mutate()
       round(-1, new Recorder, traced = false)
     }
+    Files.copyTree(catDir, savedDir)
+    start = model.state
   }
 
   def unit(spark: SparkSession, index: Int, rec: Recorder): Unit = {
+    Files.deleteTree(catDir)
+    Files.copyTree(savedDir, catDir)
+    model.restore(start)
     val changedBytes = model.mutate()
     val traced = c.trace && index % 2 == 0
     val (calls, ns, changed) = (source.calls.value, source.nanos.value, source.changed.value)
-    val t0 = Trace.now()
-    val cpu0 = Recorder.cpuNow()
+    val m = rec.begin()
     val result = rec.window(traced, s"refresh round $index")(Try(round(index, rec, traced)))
-    rec.unit(t0, Trace.now(), Recorder.cpuNow() - cpu0, model.probed, traced)
+    rec.unit(m, model.probed, traced)
     result.failed.foreach { e => rec.fail(s"refresh round $index", e); rec.check("round completes", false) }
     if (traced) {
       rec.count("fetch_calls", (source.calls.value - calls).toDouble)
@@ -271,7 +320,8 @@ class Refresh(c: Conf) extends Workload {
     }
   }
 
-  /** Final snapshot and tabularized tables against the generator's records. */
+  /** The last unit's snapshot and tabularized tables against the
+    * generator's records. */
   override def finish(spark: SparkSession, rec: Recorder): Unit = {
     def rows(df: DataFrame): Seq[String] =
       df.collect().toSeq.map(_.toSeq.map(v => if (v == null) "\\N" else v.toString).mkString("\u001f")).sorted
@@ -284,7 +334,7 @@ class Refresh(c: Conf) extends Workload {
     compare("latest_package", rows(cat.read("latest_package")), model.expectedPackages)
     compare("latest_requirement", rows(cat.read("latest_requirement")), model.expectedRequirements)
     compare("latest_url", rows(cat.read("latest_url")), model.expectedUrls)
-    rec.count("stored_bytes", Files.treeBytes(s"${c.work}/refresh_cat").toDouble)
+    rec.count("stored_bytes", Files.treeBytes(catDir).toDouble)
     rec.count("input_bytes", Files.treeBytes(src).toDouble)
   }
 }
@@ -392,20 +442,38 @@ final class PypiModel(seed: Long, dir: String) {
     live.foreach { case (k, content) => snapshot(k) = (content, onDisk(k)) }
   }
 
-  /** One round of upstream change: 10% of live keys get a new release, 2%
-    * disappear, 3% new keys appear. The crawl that follows fetches them;
-    * returns the bytes of changed and new content. */
+  /** One round of upstream change: 10% of the live keys, drawn at random,
+    * get a new release, 2% disappear and 3% new keys appear. The crawl that
+    * follows fetches them; returns the bytes of changed and new content. */
   def mutate(): Long = {
-    val keys = live.keys.toIndexedSeq
+    val keys = rnd.shuffle(live.keys.toIndexedSeq)
+    val (changed, vanished) = (keys.size / 10, keys.size / 50)
     var bytes = 0L
-    keys.foreach { k =>
-      val p = rnd.nextDouble()
-      if (p < 0.10) bytes += put(k, record(k, snapshot(k)._2.releases.toInt + 1))
-      else if (p < 0.12) { JFiles.delete(Paths.get(dir, k + ".json")); live.remove(k); onDisk.remove(k) }
+    keys.take(changed).foreach(k => bytes += put(k, record(k, snapshot(k)._2.releases.toInt + 1)))
+    keys.slice(changed, changed + vanished).foreach { k =>
+      JFiles.delete(Paths.get(dir, k + ".json")); live.remove(k); onDisk.remove(k)
     }
-    (1 to (keys.size * 0.03).toInt).foreach { _ => val k = newKey(); bytes += put(k, record(k, 1)) }
+    (1 to keys.size * 3 / 100).foreach { _ => val k = newKey(); bytes += put(k, record(k, 1)) }
     sync()
     bytes
+  }
+
+  /** The generator's state, to start later rounds from. */
+  def state: PypiModel.State = PypiModel.State(nextKey, live.toSeq, snapshot.toSeq, onDisk.toMap)
+
+  /** Back to `s`: rewrites the files that differ from it and deletes the
+    * ones it does not hold. */
+  def restore(s: PypiModel.State): Unit = {
+    val keep = s.live.toMap
+    live.keys.filterNot(keep.contains).foreach(k => JFiles.delete(Paths.get(dir, k + ".json")))
+    s.live.foreach { case (k, content) =>
+      if (!live.get(k).contains(content))
+        JFiles.write(Paths.get(dir, k + ".json"), content.getBytes(StandardCharsets.UTF_8))
+    }
+    nextKey = s.nextKey
+    live.clear(); live ++= s.live
+    snapshot.clear(); snapshot ++= s.snapshot
+    onDisk.clear(); onDisk ++= s.onDisk
   }
 
   /** Keys the crawl probes: every key in its snapshot plus the listed ones. */
@@ -436,6 +504,8 @@ final class PypiModel(seed: Long, dir: String) {
 }
 
 object PypiModel {
+  final case class State(nextKey: Int, live: Seq[(String, String)], snapshot: Seq[(String, (String, Rec))],
+                         onDisk: Map[String, Rec])
   final case class Rec(fields: Map[String, String], releases: Long, requires: Option[Seq[String]],
                        urls: Option[Seq[(String, Option[String])]])
 }

@@ -169,12 +169,19 @@ def critical_path(deps, durations):
     return max((finish(n) for n in deps), default=0)
 
 
+def clean_units(units):
+    """The units during which little CPU time was stolen from the machine,
+    or every unit if none was."""
+    return [u for u in units if u["clean"]] or list(units)
+
+
 def end_to_end(raw):
-    units = [(u["end"] - u["start"]) / NS for u in raw["units"]]
+    units = clean_units(raw["units"])
     return {
-        "wall_s": statistics.median(units),
-        "cpu_s": statistics.median(u["cpu_ns"] / NS for u in raw["units"]),
-        "setup_s": statistics.median(raw["setup_s"]),
+        "wall_s": statistics.median((u["end"] - u["start"]) / NS for u in units),
+        "cpu_s": statistics.median(u["cpu_ns"] / NS for u in units),
+        # cold: from the JVM's launch to the first measured unit
+        "setup_s": raw["first_unit_epoch_ms"] / 1e3 - raw["launched_epoch_s"],
     }
 
 
@@ -196,8 +203,9 @@ def overhead(raw):
         pairs = [(statistics.mean(v[True]), statistics.mean(v[False]))
                  for v in by.values() if v[True] and v[False]]
         return sum(t for t, _ in pairs) / sum(u for _, u in pairs) - 1 if pairs else 0.0
-    t = [u["end"] - u["start"] for u in raw["units"] if u["traced"]]
-    n = [u["end"] - u["start"] for u in raw["units"] if not u["traced"]]
+    units = clean_units(raw["units"])
+    t = [u["end"] - u["start"] for u in units if u["traced"]]
+    n = [u["end"] - u["start"] for u in units if not u["traced"]]
     return statistics.median(t) / statistics.median(n) - 1 if t and n else 0.0
 
 

@@ -75,6 +75,26 @@ class Intervals(unittest.TestCase):
         self.assertEqual(stats.critical_path(deps, {"a": 1, "b": 5, "c": 2, "d": 1}), 7)
 
 
+class EndToEnd(unittest.TestCase):
+    @staticmethod
+    def unit(start, end, clean):
+        return {"start": start, "end": end, "cpu_ns": 2 * (end - start), "clean": clean}
+
+    def test_stolen_units_left_out_of_the_medians(self):
+        ns = int(stats.NS)
+        raw = {"units": [self.unit(0, 1 * ns, True), self.unit(1 * ns, 9 * ns, False),
+                         self.unit(9 * ns, 12 * ns, True)],
+               "first_unit_epoch_ms": 1000500, "launched_epoch_s": 990.25}
+        e = stats.end_to_end(raw)
+        self.assertEqual(e["wall_s"], 2.0)
+        self.assertEqual(e["cpu_s"], 4.0)
+        self.assertAlmostEqual(e["setup_s"], 10.25)
+
+    def test_every_unit_counts_when_none_is_clean(self):
+        units = [self.unit(0, 4, False), self.unit(4, 6, False)]
+        self.assertEqual(stats.clean_units(units), units)
+
+
 class BenchmarkFile(unittest.TestCase):
     def test_metric_lists_match(self):
         with open(os.path.join(os.path.dirname(os.path.dirname(HERE)), "BENCHMARK.json")) as f:
