@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+
+import graft.harness.{LoadGate, Record, Session, TaskStats, consume, cpus}
 
 /** Benchmark main: one JSON line with per-query wall times.
   *
@@ -19,10 +20,9 @@ import org.apache.spark.sql.functions._
   *  - every timed sample is LOAD-GATED (round 7: sustained ambient load inflated
   *    four records 5-36× — BOTH interleaved samples agreed under it, so
   *    min-of-2 and the instability trigger were all blind): before starting
-  *    the timer, wait (bounded) until 1-min /proc/loadavg drops below
-  *    ~0.5× the worker thread count, and record the per-sample load in the
-  *    artifact so any still-inflated record is self-identifying in the JSON,
-  *    not just the driver log;
+  *    the timer, wait (bounded) on the harness [[LoadGate]], and record the
+  *    per-sample load in the artifact so any still-inflated record is
+  *    self-identifying in the JSON, not just the driver log;
   *  - the DuckDB oracle total for the same queries is measured right after
   *    the Spark suite (tools/oracle_bench.py) and merged into the SAME JSON
   *    line with the spark/oracle ratio, so the 2× gate is auditable from the
@@ -31,33 +31,6 @@ import org.apache.spark.sql.functions._
   *    silently swallowed into a plausible wall time.
   */
 object Bench {
-
-  /** Force full computation of every output column. bit_xor is overflow-free
-    * (ANSI mode) and order-independent. */
-  private def consume(df: DataFrame): Unit = {
-    val cols = df.columns.map(c => col(s"`$c`").cast("string"))
-    df.select(xxhash64(cols: _*).as("h")).agg(expr("bit_xor(h)")).collect()
-    ()
-  }
-
-  private def build(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // many-group TypedImperativeAggregates (top_k, kmv) must hash, not
-      // sort: the 128-group default silently degrades them (see graft.expr.TopK)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
-  private def loadavg(): Double =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ").head.toDouble
-    catch { case _: Throwable => -1.0 }
 
   /** BENCH_FULL narrowing-guard decision (pure, spec-pinned): the full record
     * accepts a run only when it covers at least as many queries AND the same
@@ -80,36 +53,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
     // Load gate: a sample started while the box is already busy measures the
     // ambient load, not the query (round-7 postmortem: recorded 38.1s for a
     // query that runs 4.25s isolated — under load the whole suite, every
-    // sample agreed). Threshold defaults to half the worker threads: our own
-    // just-finished queries leave a small decaying contribution (~1-3 on this
-    // suite, 1-min EWMA), genuinely competing work shows up as tens. The wait
-    // is bounded per sample AND by a global budget so a busy box degrades to
-    // the old behavior (measure anyway, record the load) instead of hanging.
-    val loadGate = sys.env.get("SPARK_GRAFT_LOAD_GATE").map(_.toDouble)
-      .getOrElse(math.max(2.0, 0.5 * cpus.toDouble))
-    var waitBudgetMs = sys.env.get("SPARK_GRAFT_LOAD_WAIT_BUDGET_MS").map(_.toLong)
-      .getOrElse(900000L)
-    def gateOnLoad(tag: String): Double = {
-      var l = loadavg()
-      var tries = 0
-      while (l > loadGate && tries < 10 && waitBudgetMs > 0) {
-        val napMs = math.min(30000L, waitBudgetMs)
-        System.err.println(f"[bench][gate] $tag load=$l%.2f > $loadGate%.1f, waiting ${napMs / 1000}s " +
-          f"(budget ${waitBudgetMs / 1000}s left)")
-        Thread.sleep(napMs)
-        waitBudgetMs -= napMs
-        tries += 1
-        l = loadavg()
-      }
-      l
-    }
+    // sample agreed).
+    val gate = new LoadGate("bench")
 
-    var spark = build(cpus)
+    var spark = Session.profile(cpus)
     def restart(): SparkSession = {
       // a failed teardown must never kill the whole bench run: log, wait out
       // transient churn (port reuse, executor threads draining), try once more
@@ -120,12 +71,12 @@ object Bench {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
       spark =
-        try build(cpus)
+        try Session.profile(cpus)
         catch {
           case e: Throwable =>
             System.err.println(s"[bench] session rebuild failed, retrying: ${e.getMessage}")
             Thread.sleep(2000)
-            build(cpus)
+            Session.profile(cpus)
         }
       spark
     }
@@ -172,14 +123,12 @@ object Bench {
     def emit(oracle: Option[(Double, String)]): Unit = {
       def r3(d: Double): Double = if (d < 0) d else math.round(d * 1000.0) / 1000.0
       def r2(d: Double): Double = if (d < 0) d else math.round(d * 100.0) / 100.0
-      val qs = best.map { case (k, (v, l)) => "\"" + k + "\":[" + r3(v) + "," + r2(l) + "]" }
-        .mkString("{", ",", "}")
-      val ss = samples.toSeq.sortBy(_._1).map { case (k, xs) =>
-        "\"" + k + "\":" + xs.reverse.map { case (s, l) => s"[${r3(s)},${r2(l)}]" }.mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-      val slowest = best.toSeq.collect { case (k, (v, _)) if v >= 0 => (k, v) }
-        .sortBy(-_._2).take(8)
-        .map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
+      val qs = Record.obj(best.map { case (k, (v, l)) => k -> s"[${r3(v)},${r2(l)}]" })
+      val ss = Record.obj(samples.toSeq.sortBy(_._1).map { case (k, xs) =>
+        k -> xs.reverse.map { case (s, l) => s"[${r3(s)},${r2(l)}]" }.mkString("[", ",", "]")
+      })
+      val slowest = Record.obj(best.toSeq.collect { case (k, (v, _)) if v >= 0 => (k, v) }
+        .sortBy(-_._2).take(8).map { case (k, v) => k -> r3(v) })
       val failed = best.valuesIterator.count(_._1 < 0)
       val total = best.valuesIterator.map(_._1).filter(_ >= 0).sum
       val oracleRaw = oracle.map { case (_, oJson) => s""""oracle":$oJson,""" }.getOrElse("")
@@ -197,27 +146,23 @@ object Bench {
         case (k, (v, _)) if v >= 0 && oracleQ.get(k).exists(_ > 0) =>
           (k, v, oracleQ(k), v / oracleQ(k))
       }
-      val ratiosJson = triples
-        .map { case (k, s, o, r) => "\"" + k + s"""\":[${r3(s)},${r3(o)},${r2(r)}]""" }
-        .mkString("{", ",", "}")
+      val ratiosJson = Record.obj(triples.map { case (k, s, o, r) => k -> s"[${r3(s)},${r3(o)},${r2(r)}]" })
       // rank only pairs where BOTH engines do non-trivial work: a 0.5s Spark
       // constant over a sub-millisecond DuckDB microquery is a 500x "ratio"
       // that says nothing about scale behavior — the full ratios object above
       // still carries every query for auditing those constants
       val worstTriples = triples.filter { case (_, s, o, _) => o >= 0.05 && s >= 0.25 }
         .sortBy(-_._4).take(8)
-      val worstRatio = worstTriples
-        .map { case (k, _, _, r) => "\"" + k + "\":" + r2(r) }.mkString("{", ",", "}")
+      val worstRatio = Record.obj(worstTriples.map { case (k, _, _, r) => k -> r2(r) })
       // floor attribution for the worst ratios, compact enough for the tail:
       // [n_jobs, n_stages] of the best sample — a big ratio with a two-digit
       // job count is materialization/scheduling floor, not a plan defect
-      val worstJobs = worstTriples.flatMap { case (k, _, _, _) =>
-        jobsOf.get(k).map { case (j, st) => "\"" + k + s"""\":[$j,$st]""" }
-      }.mkString("{", ",", "}")
+      val worstJobs = Record.obj(worstTriples.flatMap { case (k, _, _, _) =>
+        jobsOf.get(k).map { case (j, st) => k -> s"[$j,$st]" }
+      })
       // the complete per-query (jobs, stages) map rides in the bulky zone
       // (preserved whole in BENCH_FULL.json)
-      val jobsJson = jobsOf.toSeq.sortBy(_._1)
-        .map { case (k, (j, st)) => "\"" + k + s"""\":[$j,$st]""" }.mkString("{", ",", "}")
+      val jobsJson = Record.obj(jobsOf.toSeq.sortBy(_._1).map { case (k, (j, st)) => k -> s"[$j,$st]" })
       val summary = oracle match {
         case Some((oTotal, _)) =>
           val ratio = if (oTotal > 0) total / oTotal else -1.0
@@ -228,11 +173,11 @@ object Bench {
       // full line (everything, as every round before) → BENCH_FULL.json;
       // compact line (summary only) → stdout for the driver's tail capture
       val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir",""" +
-        s""""load_gate":$loadGate,"samples":$ss,$oracleRaw"jobs":$jobsJson,"ratios":$ratiosJson,""" +
+        s""""load_gate":${gate.threshold},"samples":$ss,$oracleRaw"jobs":$jobsJson,"ratios":$ratiosJson,""" +
         s""""queries":$qs,"slowest":$slowest,"worst_ratio":$worstRatio,"worst_jobs":$worstJobs,""" +
         s"""$summary,"failed":$failed,"n_queries":${best.size}}"""
       val compact = s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir",""" +
-        s""""load_gate":$loadGate,"queries":$qs,"slowest":$slowest,""" +
+        s""""load_gate":${gate.threshold},"queries":$qs,"slowest":$slowest,""" +
         s""""worst_ratio":$worstRatio,"worst_jobs":$worstJobs,""" +
         s"""$summary,"failed":$failed,"n_queries":${best.size}}"""
       println(compact)
@@ -269,17 +214,8 @@ object Bench {
     }
 
     def measure(pass: String, name: String, fn: (SparkSession, String) => DataFrame): Unit = {
-      val load = gateOnLoad(name)
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val stages = new java.util.concurrent.atomic.AtomicInteger
-      val counter = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet()
-          stages.addAndGet(j.stageInfos.size)
-          ()
-        }
-      }
-      spark.sparkContext.addSparkListener(counter)
+      val load = gate.await(name)
+      val stats = TaskStats.attach(spark)
       val t0 = System.nanoTime()
       val sec =
         try { consume(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
@@ -288,21 +224,16 @@ object Bench {
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
             -1.0
         }
-        finally {
-          // the listener bus is async; the final job necessarily STARTED
-          // before consume() returned, but its event may be a few ms behind —
-          // a short drain keeps the counts exact in practice
-          Thread.sleep(50)
-          spark.sparkContext.removeSparkListener(counter)
-        }
+      val (jobs, stages) = (stats.jobs, stats.stages)
+      stats.detach()
       System.err.println(f"[bench][$pass] $name $sec%.2fs load=$load%.2f " +
-        s"jobs=${jobs.get} stages=${stages.get}")
+        s"jobs=$jobs stages=$stages")
       if (sec >= 0) {
         samples(name) = (sec, load) :: samples(name)
         val (prev, _) = best(name)
         if (prev < 0 || sec < prev) {
           best(name) = (sec, load)
-          jobsOf(name) = (jobs.get, stages.get)
+          jobsOf(name) = (jobs, stages)
         }
       }
       restart()
@@ -330,21 +261,17 @@ object Bench {
       }
       // Load-flagged final pass: min-of-2 + the instability trigger are both
       // blind to SUSTAINED ambient load (every sample agrees at the inflated
-      // value, and the gate only blocks above ~0.5x cores — a co-tenant
-      // burning a quarter of the box sails under it yet inflated
-      // q_dedup_minhash 6x in one observed run). Any query whose BEST sample
-      // was taken above the clean-load threshold gets one more gated sample
-      // at the end of the run, when the box has had the longest chance to
-      // drain; min() keeps whichever is faster, and the recorded load tells
-      // the reader which regime won.
-      val loadFlag = sys.env.get("SPARK_GRAFT_LOAD_FLAG").map(_.toDouble)
-        .getOrElse(math.max(2.0, 0.1 * cpus.toDouble))
+      // value). Any query whose BEST sample started above the gate's
+      // threshold (the gate's wait ran out) gets one more gated sample at the
+      // end of the run, when the box has had the longest chance to drain;
+      // min() keeps whichever is faster, and the recorded load tells the
+      // reader which regime won.
       val loaded = queries.filter { case (name, _) =>
-        val (sec, load) = best(name); sec >= 0 && load > loadFlag
+        val (sec, load) = best(name); sec >= 0 && load > gate.threshold
       }
       if (loaded.nonEmpty) {
         System.err.println(s"[bench] re-measuring ${loaded.size} load-flagged queries " +
-          s"(best sample above load $loadFlag): " + loaded.map(_._1).mkString(", "))
+          s"(best sample above load ${gate.threshold}): " + loaded.map(_._1).mkString(", "))
         loaded.foreach { case (name, fn) => measure("pass4", name, fn) }
       }
     } catch {
@@ -356,7 +283,7 @@ object Bench {
       // or aborted suite cannot produce a spuriously LOW ratio (partial spark
       // total over the full oracle total)
       val measured = best.collect { case (k, (sec, _)) if sec >= 0 => k }.toSeq
-      emit(runOracleBench(sfDir, cpus, measured))
+      emit(runOracleBench(sfDir, measured))
     }
   }
 
@@ -364,8 +291,7 @@ object Bench {
     * duckdb; see tools/oracle_bench.py) and return (total_sec, full JSON
     * line). Skipped quietly when the tool or its runtime is unavailable —
     * the artifact then carries oracle_total_sec: null rather than a guess. */
-  private def runOracleBench(sfDir: String, cpus: String,
-                             measured: Seq[String]): Option[(Double, String)] =
+  private def runOracleBench(sfDir: String, measured: Seq[String]): Option[(Double, String)] =
     try {
       val script = new java.io.File("tools/oracle_bench.py")
       if (!script.exists()) {
@@ -374,55 +300,20 @@ object Bench {
       } else if (measured.isEmpty) {
         System.err.println("[bench] no successful measurements; skipping oracle total")
         None
-      } else runOracleScript(script, sfDir, cpus, measured)
+      } else runOracleScript(script, sfDir, measured)
     } catch {
       case e: Throwable =>
         System.err.println(s"[bench] oracle bench unavailable: ${e.getMessage}")
         None
     }
 
-  /** Dump SparkEntry.oracleSql as JSON for oracle_bench.py — always fresh,
-    * so the oracle never runs a stale statement set (the script's own
-    * fallback dump costs a full Verify run). */
-  private def dumpOracleSql(outDir: java.io.File): Unit = {
-    outDir.mkdirs()
-    def esc(s: String): String = {
-      val b = new StringBuilder(s.length + 16)
-      s.foreach {
-        case '"' => b.append("\\\"")
-        case '\\' => b.append("\\\\")
-        case '\n' => b.append("\\n")
-        case '\r' => b.append("\\r")
-        case '\t' => b.append("\\t")
-        case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-        case c => b.append(c)
-      }
-      b.toString
-    }
-    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
-      .mkString("{", ",\n", "}")
-    java.nio.file.Files.write(outDir.toPath.resolve("oracle_sql.json"),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // the symmetrized-bench companion: untimed artifact builds (ordered)
-    // plus per-query timed overrides (see SparkEntry.oracleSetupSql)
-    val setup = SparkEntry.oracleSetupSql
-      .map { case (t, sql) => s"""["${esc(t)}", "${esc(sql)}"]""" }
-      .mkString("[", ",\n", "]")
-    val timed = SparkEntry.oracleBenchSql.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
-      .mkString("{", ",\n", "}")
-    java.nio.file.Files.write(outDir.toPath.resolve("oracle_bench_sql.json"),
-      s"""{"setup": $setup,\n"timed": $timed}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    ()
-  }
-
-  private def runOracleScript(script: java.io.File, sfDir: String, cpus: String,
+  private def runOracleScript(script: java.io.File, sfDir: String,
                               measured: Seq[String]): Option[(Double, String)] = {
       System.err.println("[bench] timing DuckDB oracle suite for the ratio denominator…")
-      dumpOracleSql(new java.io.File("/tmp/graft_oracle_bench"))
-      val pb = new ProcessBuilder("python3", script.getPath, sfDir, cpus)
+      // always fresh, so the oracle never runs a stale statement set (the
+      // script's own fallback dump costs a full Verify run)
+      Verify.dumpOracleSql("/tmp/graft_oracle_bench")
+      val pb = new ProcessBuilder("python3", script.getPath, sfDir, cpus.toString)
       // scope the oracle run to the queries Spark actually measured
       pb.environment().put("SPARK_GRAFT_ONLY", measured.mkString(","))
       // stderr flows straight to ours: buffering it behind the stdout read

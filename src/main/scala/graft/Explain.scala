@@ -1,22 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.harness.{Session, cpus}
 
 /** Plan auditor: prints the formatted physical plan for the named queries
-  * (all queries if none named) so shuffle/broadcast/pushdown decisions can be
-  * reviewed. Usage: graft.Explain [sfDir] [q1,q2,...] */
+  * (all queries if none named) on the engine's session profile, so the plans
+  * shown are the ones the bench executes. Usage: graft.Explain [sfDir] [q1,q2,...] */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val only: Set[String] =
       if (args.length > 1) args(1).split(",").toSet else Set.empty
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.profile(cpus, logLevel = "ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only.contains(n) }
       .foreach { case (name, fn) =>

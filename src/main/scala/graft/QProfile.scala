@@ -1,65 +1,33 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.harness.{Session, TaskStats, consume, cpus}
 
 /** Dev profiler: warm wall time + job/stage counts for named declared
   * queries, without the bench harness's fresh-session/min-of-N machinery —
   * for fast A/B iteration during optimization rounds. Usage:
   * QProfile [sfDir] [q1,q2,...] [reps]. Not a measurement of record
-  * (BENCH_FULL.json is); numbers here are one warm session, one sample.
+  * (perfbench/run.py and BENCH_FULL.json are); numbers here are one warm
+  * session, one sample.
   */
 object QProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val only: Set[String] = if (args.length > 1) args(1).split(",").toSet else Set.empty
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def consume(df: DataFrame): Unit = {
-      val cols = df.columns.map(c => col(s"`$c`").cast("string"))
-      df.select(xxhash64(cols: _*).as("h")).agg(expr("bit_xor(h)")).collect()
-      ()
-    }
+    val spark = Session.profile(cpus)
     val qs = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only.contains(n) }
     qs.foreach { case (name, fn) =>
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val stages = new java.util.concurrent.atomic.AtomicInteger
-      val dumpJobs = sys.env.contains("QPROFILE_JOBS")
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); stages.addAndGet(j.stageInfos.size)
-          if (dumpJobs) {
-            val site = Option(j.properties).map(_.getProperty("callSite.short", "?")).getOrElse("?")
-            val tasks = j.stageInfos.map(_.numTasks).sum
-            val names = j.stageInfos.map(si => s"${si.name.takeWhile(_ != '(')}:${si.numTasks}").mkString(",")
-            System.err.println(s"[qprofile][job ${j.jobId}] $site stages=${j.stageInfos.size} tasks=$tasks [$names]")
-          }
-          ()
-        }
-        override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-          if (dumpJobs) System.err.println(s"[qprofile][job ${j.jobId}] done")
-      }
       consume(fn(spark, sfDir)) // warm
-      spark.sparkContext.addSparkListener(listener)
+      val stats = TaskStats.attach(spark)
       val ts = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         consume(fn(spark, sfDir))
         (System.nanoTime() - t0) / 1e9
       }
-      Thread.sleep(50)
-      spark.sparkContext.removeSparkListener(listener)
       println(f"$name%-28s min=${ts.min}%.3fs samples=${ts.map(t => f"$t%.3f").mkString(",")} " +
-        s"jobs=${jobs.get / reps} stages=${stages.get / reps}")
+        s"jobs=${stats.jobs / reps} stages=${stats.stages / reps}")
+      stats.detach()
     }
     spark.stop()
   }

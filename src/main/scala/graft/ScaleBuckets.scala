@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.harness.{Session, cpus}
 
 /** Off-toy scale proof for the catalog's BUCKETED layout
   * ([[graft.engine.Catalog.writeBucketed]]): two facts bucketed the same way
@@ -34,21 +36,14 @@ object ScaleBuckets {
   def main(args: Array[String]): Unit = {
     val nRows = sys.env.getOrElse("SCALE_EVENTS", "10000000").toLong
     val nUsers = sys.env.getOrElse("SCALE_USERS", "500000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val work = java.nio.file.Files.createTempDirectory("graft_scale_buckets")
     TempCleanup.deleteOnExit(work)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = Session.profile(cpus, Map(
       // the comparison is co-location vs shuffle; a broadcast of the
       // aggregated side would measure a different (size-gated) optimization
       // and make the exchange-count assertion nondeterministic
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.warehouse.dir", s"$work/warehouse")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.warehouse.dir" -> s"$work/warehouse"))
 
     val cat = new graft.engine.Catalog(spark, s"$work/cat")
     def fact(seed: Int): DataFrame = spark.range(nRows).select(
@@ -56,7 +51,7 @@ object ScaleBuckets {
       pmod(xxhash64(col("id"), lit(seed)), lit(nUsers)).as("user_id"),
       (pmod(xxhash64(col("id"), lit(seed + 1)), lit(1000)) / lit(100.0)).as(s"v$seed"))
 
-    val nBuckets = cpus.toInt
+    val nBuckets = cpus
     val tW0 = System.nanoTime()
     cat.write(fact(1), "ev_plain"); cat.write(fact(7), "tx_plain")
     val plainWriteSec = (System.nanoTime() - tW0) / 1e9
@@ -81,7 +76,7 @@ object ScaleBuckets {
 
     // bit_xor of row hashes: order-independent and overflow-free (ANSI mode
     // errors on long-sum overflow), exact across layouts
-    def consume(df: DataFrame): (Long, Long) = {
+    def checksum(df: DataFrame): (Long, Long) = {
       val r = df
         .select(xxhash64(col("user_id"), col("ev_n"), col("tx_total").cast("string")).as("h"))
         .agg(count(lit(1)), expr("bit_xor(h)")).collect()(0)
@@ -94,12 +89,12 @@ object ScaleBuckets {
     for (_ <- 1 to 2) {
       val p = enrich(cat.read("ev_plain"), cat.read("tx_plain"))
       val t0 = System.nanoTime()
-      plainRes = consume(p)
+      plainRes = checksum(p)
       plainSec = math.min(plainSec, (System.nanoTime() - t0) / 1e9)
       plainEx = exchanges(p)
       val b = enrich(cat.readTable("ev_bucketed"), cat.readTable("tx_bucketed"))
       val t1 = System.nanoTime()
-      bucketRes = consume(b)
+      bucketRes = checksum(b)
       bucketSec = math.min(bucketSec, (System.nanoTime() - t1) / 1e9)
       bucketEx = exchanges(b)
     }

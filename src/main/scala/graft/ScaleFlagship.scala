@@ -1,12 +1,10 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine.{Catalog, EtlGroup}
+import graft.harness.{Harness, Record, Sample}
 
 /** Off-toy scale proof for the WHOLE flagship pipeline shape: extraction →
   * ER (feature/block/pair/score/cluster) → id rewrite → grouping →
@@ -43,58 +41,15 @@ object ScaleFlagship {
     // ×100 disjoint sf0.01 replicas keep every stage linear in copies — the
     // production shape (more entities, not hotter blocks)
     val sfDir = sys.env.getOrElse("SCALE_FLAGSHIP_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val h = new Harness("scale_flagship")
+    val spark = h.spark
 
-    def loadavg(): Double =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ").head.toDouble
-      catch { case _: Throwable => -1.0 }
-    val loadGate = sys.env.get("SPARK_GRAFT_LOAD_GATE").map(_.toDouble)
-      .getOrElse(math.max(2.0, 0.5 * cpus.toDouble))
-    var waitBudgetMs = sys.env.get("SPARK_GRAFT_LOAD_WAIT_BUDGET_MS").map(_.toLong)
-      .getOrElse(600000L)
-    def gateOnLoad(tag: String): Double = {
-      var l = loadavg()
-      var tries = 0
-      while (l > loadGate && tries < 10 && waitBudgetMs > 0) {
-        val napMs = math.min(30000L, waitBudgetMs)
-        System.err.println(f"[scale_flagship][gate] $tag load=$l%.2f > $loadGate%.1f, waiting ${napMs / 1000}s")
-        Thread.sleep(napMs)
-        waitBudgetMs -= napMs
-        tries += 1
-        l = loadavg()
-      }
-      l
+    case class Point(copies: Int, counts: Map[String, Long], stages: Seq[(String, Sample[Any])],
+                     graphRows: Long, mappingRows: Long) {
+      def totalSec: Double = stages.map(_._2.sec).sum
+      def stageJson(f: Sample[Any] => String): String =
+        Record.obj(stages.map { case (k, run) => k -> f(run) })
     }
-
-    val durations = new ConcurrentLinkedQueue[(Int, Long)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        durations.add((te.stageId, te.taskInfo.duration)); ()
-      }
-    })
-    def straggler(): Double = {
-      val byStage = durations.toArray(Array.empty[(Int, Long)])
-        .groupBy(_._1).values.map(_.map(_._2).filter(_ >= 200).sorted)
-        .filter(_.length >= 8)
-      val r = if (byStage.isEmpty) 1.0
-        else byStage.map(ts => ts.last.toDouble / ts(ts.length / 2).toDouble).max
-      durations.clear()
-      r
-    }
-
-    case class Point(copies: Int, counts: Map[String, Long],
-                     stageSecs: scala.collection.Map[String, Double],
-                     stageStragglers: scala.collection.Map[String, Double],
-                     stageLoads: scala.collection.Map[String, Double],
-                     graphRows: Long, mappingRows: Long)
 
     def runPoint(copies: Int): Point = {
     // --- id-disjoint ×copies corpus, projected to the columns the pipeline
@@ -147,19 +102,11 @@ object ScaleFlagship {
     }.toMap
 
     // --- the pipeline, stage family by stage family
-    val stageSecs = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val stageStragglers = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val stageLoads = scala.collection.mutable.LinkedHashMap[String, Double]()
-    Flagship.stages.foreach { case (stage, nodes) =>
-      val load = gateOnLoad(stage)
-      val t0 = System.nanoTime()
-      new EtlGroup(s"flagship_$stage", nodes, dropIntermediates = false)
-        .execute(cat, maxActiveRun = 4)
-      val sec = (System.nanoTime() - t0) / 1e9
-      stageSecs(stage) = sec
-      stageStragglers(stage) = straggler()
-      stageLoads(stage) = load
-      System.err.println(f"[scale_flagship] $stage $sec%.1fs load=$load%.2f")
+    val stages = Flagship.stages.map { case (stage, nodes) =>
+      stage -> h.bestOf(stage, samples = 1) {
+        new EtlGroup(s"flagship_$stage", nodes, dropIntermediates = false)
+          .execute(cat, maxActiveRun = 4)
+      }
     }
 
     val graph = cat.read("flagship_graph")
@@ -171,36 +118,35 @@ object ScaleFlagship {
     val messyLeft = graph.join(mapping,
       graph("to_id") === mapping("messy_id"), "left_semi").count()
     require(messyLeft == 0L, s"$messyLeft link endpoints still carry messy ids after ER rewrite")
-    System.err.println(f"[scale_flagship] x$copies total=${stageSecs.values.sum}%.1fs " +
-      s"graph_rows=$graphRows")
+    val point = Point(copies, counts, stages, graphRows, mappingRows)
+    System.err.println(f"[scale_flagship] x$copies total=${point.totalSec}%.1fs graph_rows=$graphRows")
     // free this point's corpus + catalog NOW: every count above is already
     // materialized, and a multi-point run holding all work dirs until JVM
     // exit stacks ~13 GB (×100) + ~34 GB (×250) + ~55 GB (×400) of parquet
     // on one disk — eager deletion caps peak usage at the largest point
     TempCleanup.deleteNow(work)
-    Point(copies, counts, stageSecs, stageStragglers, stageLoads, graphRows, mappingRows)
+    point
     } // runPoint
 
     val points = copiesList.map(runPoint)
     val p = points.last
 
-    def jmap(m: scala.collection.Map[String, Double], f: Double => String): String =
-      m.map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
     val pointsJson = points.map { pt =>
-      s"""{"copies":${pt.copies},"total_sec":${f"${pt.stageSecs.values.sum}%.3f"},""" +
-        s""""result_sec":${f"${pt.stageSecs.getOrElse("result", 0.0)}%.3f"},""" +
+      val resultSec = pt.stages.collectFirst { case ("result", run) => run.sec }.getOrElse(0.0)
+      s"""{"copies":${pt.copies},"total_sec":${f"${pt.totalSec}%.3f"},""" +
+        s""""result_sec":${f"$resultSec%.3f"},""" +
         s""""graph_rows":${pt.graphRows}}"""
     }.mkString("[", ",", "]")
     println(s"""{"metric":"scale_flagship","copies":${p.copies},""" +
       s""""customers":${p.counts("customer")},"orders":${p.counts("orders")},""" +
       s""""lineitems":${p.counts("lineitem")},"parts":${p.counts("part")},""" +
       s""""points":$pointsJson,""" +
-      s""""stage_secs":${jmap(p.stageSecs, v => f"$v%.3f")},""" +
-      s""""total_sec":${f"${p.stageSecs.values.sum}%.3f"},""" +
+      s""""stage_secs":${p.stageJson(run => f"${run.sec}%.3f")},""" +
+      s""""total_sec":${f"${p.totalSec}%.3f"},""" +
       s""""graph_rows":${p.graphRows},"er_mapping_rows":${p.mappingRows},""" +
       s""""messy_left":0,"validators_pass":true,""" +
-      s""""stage_stragglers":${jmap(p.stageStragglers, v => f"$v%.2f")},""" +
-      s""""loads":${jmap(p.stageLoads, v => f"$v%.2f")}}""")
+      s""""stage_stragglers":${p.stageJson(run => f"${run.straggler}%.2f")},""" +
+      s""""loads":${p.stageJson(run => f"${run.load}%.2f")}}""")
     spark.stop()
   }
 }

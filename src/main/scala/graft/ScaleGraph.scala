@@ -1,10 +1,8 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.harness.{Harness, Record, Sample}
 
 /** Off-toy scale proof for the graph-analytics family: the shuffle-path
   * PageRank, shuffle-path triangle count, and distributed min-label
@@ -48,80 +46,9 @@ object ScaleGraph {
     val edgesN = sys.env.getOrElse("SCALE_EDGES", "10000000").toLong
     val nodesN = sys.env.getOrElse("SCALE_NODES", "2000000").toLong
     val prIters = sys.env.getOrElse("SCALE_PR_ITERS", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def loadavg(): Double =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ").head.toDouble
-      catch { case _: Throwable => -1.0 }
-    val loadGate = sys.env.get("SPARK_GRAFT_LOAD_GATE").map(_.toDouble)
-      .getOrElse(math.max(2.0, 0.5 * cpus.toDouble))
-    var waitBudgetMs = sys.env.get("SPARK_GRAFT_LOAD_WAIT_BUDGET_MS").map(_.toLong)
-      .getOrElse(600000L)
-    def gateOnLoad(tag: String): Double = {
-      var l = loadavg()
-      var tries = 0
-      while (l > loadGate && tries < 10 && waitBudgetMs > 0) {
-        val napMs = math.min(30000L, waitBudgetMs)
-        System.err.println(f"[scale_graph][gate] $tag load=$l%.2f > $loadGate%.1f, waiting ${napMs / 1000}s")
-        Thread.sleep(napMs)
-        waitBudgetMs -= napMs
-        tries += 1
-        l = loadavg()
-      }
-      l
-    }
-
-    val durations = new ConcurrentLinkedQueue[(Int, Long)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        durations.add((te.stageId, te.taskInfo.duration)); ()
-      }
-    })
-    def straggler(): Double = {
-      val byStage = durations.toArray(Array.empty[(Int, Long)])
-        .groupBy(_._1).values.map(_.map(_._2).filter(_ >= 200).sorted)
-        .filter(_.length >= 8)
-      val r = if (byStage.isEmpty) 1.0
-        else byStage.map(ts => ts.last.toDouble / ts(ts.length / 2).toDouble).max
-      durations.clear()
-      r
-    }
-    val phaseSamples = sys.env.getOrElse("SCALE_PHASE_SAMPLES", "2").toInt
-    def bestOf[A](tag: String)(body: => A): (A, Double, Double, Double) = {
-      val runs = (1 to phaseSamples).map { _ =>
-        // Pay the PREVIOUS phase's GC debt outside the timed window: the
-        // broadcast-path PageRank churns ~100 MB driver arrays per round,
-        // and without this the next phase's first mixed-GC pause lands
-        // mid-sample and reads as a task-time straggler (observed: the cc
-        // phase, which runs last, recording 2x wall + 4.7 max/median in
-        // the SAME code a fresh-JVM probe runs clean). The explicit gc()
-        // also lets the ContextCleaner reap the prior phase's now-
-        // unreachable localCheckpoint blocks before the sample starts —
-        // same hygiene class as the clearCache() below.
-        System.gc()
-        Thread.sleep(2000)
-        val load = gateOnLoad(tag)
-        val t = System.nanoTime()
-        val a = body
-        val sec = (System.nanoTime() - t) / 1e9
-        val st = straggler()
-        // persisted intermediates (edge snapshot, degree table, adjacency)
-        // are per-invocation state — drop them so the next sample starts
-        // cold and samples measure the same work
-        spark.catalog.clearCache()
-        System.err.println(f"[scale_graph] $tag sample $sec%.1fs load=$load%.2f straggler=$st%.2f")
-        (a, sec, st, load)
-      }
-      runs.minBy(_._2)
-    }
+    val h = new Harness("scale_graph")
+    val spark = h.spark
+    import h.bestOf
 
     // --- synthetic power-law graph, materialized and re-read like real input
     val work = java.nio.file.Files.createTempDirectory("graft_scale_graph")
@@ -145,46 +72,41 @@ object ScaleGraph {
     val maxDegree = degStats.getLong(1)
 
     import graft.graph.Analytics
+    // a phase left out by SCALE_GRAPH_PHASES records zeros
+    val skipped = Sample(0L, 0.0, 0.0, 0.0)
 
     // --- triangles: far (shuffle) path, then the gated (broadcast) path
-    val (triShuffle, triShuffleSec, triShuffleStr, triShuffleLoad,
-         triBroadcastSec, triBroadcastStr, triBroadcastLoad) = if (!phases("tri"))
-      (0L, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
-    else {
+    val (triShuffle, triBroadcast) = if (!phases("tri")) (skipped, skipped) else {
       System.setProperty("graft.tri.broadcastMaxEdges", "0")
-      val (tS, tSSec, tSStr, tSLoad) =
-        bestOf("tri_shuffle") {
-          Analytics.triangleCount(edges).head.getLong(0)
-        }
+      val tS = bestOf("tri_shuffle") {
+        Analytics.triangleCount(edges).head.getLong(0)
+      }
       System.setProperty("graft.tri.broadcastMaxEdges", Long.MaxValue.toString)
-      val (tB, tBSec, tBStr, tBLoad) =
-        bestOf("tri_broadcast") {
-          Analytics.triangleCount(edges).head.getLong(0)
-        }
+      val tB = bestOf("tri_broadcast") {
+        Analytics.triangleCount(edges).head.getLong(0)
+      }
       System.clearProperty("graft.tri.broadcastMaxEdges")
-      require(tS == tB,
-        s"triangle paths disagree: shuffle=$tS broadcast=$tB")
-      (tS, tSSec, tSStr, tSLoad, tBSec, tBStr, tBLoad)
+      require(tS.value == tB.value,
+        s"triangle paths disagree: shuffle=${tS.value} broadcast=${tB.value}")
+      (tS, tB)
     }
 
     // --- PageRank: far (shuffle Pregel) path, then the gated (driver-held
     // contribution table) path — identical integer arithmetic, so the two
     // rank tables must be bit-equal
-    val (prShuffleSec, prShuffleStr, prShuffleLoad,
-         prBroadcastSec, prBroadcastStr, prBroadcastLoad, prEqual, prCadenceJson) = if (!phases("pr"))
-      (0.0, 0.0, 0.0, 0.0, 0.0, 0.0, false, "{}")
+    val (prShuffle, prBroadcast, prEqual, prCadenceJson) = if (!phases("pr"))
+      (skipped, skipped, false, "{}")
     else {
       System.setProperty("graft.pr.broadcastMaxNodes", "0")
       // pin per-round cuts for the base run: the production default is the
       // cadence the r19 sweep chose (k=2), and the sweep's "1" row must
       // actually measure k=1
       System.setProperty("graft.pr.checkpointEvery", "1")
-      val (pSOut, pSSec, pSStr, pSLoad) =
-        bestOf("pr_shuffle") {
-          val out = Analytics.pageRank(edges, prIters).localCheckpoint(true)
-          out.count()
-          out
-        }
+      val pS = bestOf("pr_shuffle") {
+        val out = Analytics.pageRank(edges, prIters).localCheckpoint(true)
+        out.count()
+        out
+      }
       System.clearProperty("graft.pr.checkpointEvery")
       // checkpoint-cadence probe (round-18 advice #7): the shuffle path cuts
       // lineage every round — 9 materializations over 10 rounds at this node
@@ -192,31 +114,29 @@ object ScaleGraph {
       // blockstore writes for deeper plans; ranks must stay bit-equal.
       val cadenceSecs = Seq(2, 3).map { k =>
         System.setProperty("graft.pr.checkpointEvery", k.toString)
-        val (out, sec, _, _) = bestOf(s"pr_shuffle_ck$k") {
+        val Sample(out, sec, _, _) = bestOf(s"pr_shuffle_ck$k") {
           val o = Analytics.pageRank(edges, prIters).localCheckpoint(true)
           o.count()
           o
         }
         System.clearProperty("graft.pr.checkpointEvery")
-        require(out.except(pSOut).isEmpty && pSOut.except(out).isEmpty,
+        require(out.except(pS.value).isEmpty && pS.value.except(out).isEmpty,
           s"cadence-$k ranks diverged from per-round checkpointing")
         k -> sec
       }
-      val cadenceJson = ((1 -> pSSec) +: cadenceSecs)
-        .map { case (k, s) => s""""$k":$s""" }.mkString("{", ",", "}")
+      val cadenceJson = Record.obj(((1 -> pS.sec) +: cadenceSecs).map { case (k, s) => k.toString -> s })
       // FORCE the broadcast path (the default gate is 100k nodes — measured
       // by this harness's own crossover probes — so a cleared prop would
       // silently measure the shuffle path twice at this size)
       System.setProperty("graft.pr.broadcastMaxNodes", Long.MaxValue.toString)
-      val (pBOut, pBSec, pBStr, pBLoad) =
-        bestOf("pr_broadcast") {
-          val out = Analytics.pageRank(edges, prIters).localCheckpoint(true)
-          out.count()
-          out
-        }
+      val pB = bestOf("pr_broadcast") {
+        val out = Analytics.pageRank(edges, prIters).localCheckpoint(true)
+        out.count()
+        out
+      }
       System.clearProperty("graft.pr.broadcastMaxNodes")
-      val eq = pSOut.except(pBOut).isEmpty && pBOut.except(pSOut).isEmpty
-      (pSSec, pSStr, pSLoad, pBSec, pBStr, pBLoad, eq, cadenceJson)
+      val eq = pS.value.except(pB.value).isEmpty && pB.value.except(pS.value).isEmpty
+      (pS, pB, eq, cadenceJson)
     }
 
     // --- connected components: far (distributed min-label + pointer
@@ -229,27 +149,24 @@ object ScaleGraph {
     // plain min-label propagation would need O(diameter) rounds and the
     // pointer-jumping compression has to do real work.
     import graft.er.ConnectedComponents
-    val (ccDistSec, ccDistStr, ccDistLoad,
-         ccDriverSec, ccDriverStr, ccDriverLoad, ccEqual, ccComponents) = if (!phases("cc"))
-      (0.0, 0.0, 0.0, 0.0, 0.0, 0.0, false, 0L)
+    val (ccDist, ccDriver, ccEqual, ccComponents) = if (!phases("cc"))
+      (skipped, skipped, false, 0L)
     else {
-      val (cDOut, cDSec, cDStr, cDLoad) =
-        bestOf("cc_distributed") {
-          val out = ConnectedComponents.run(edges, driverThreshold = 0L)
-            .localCheckpoint(true)
-          out.count()
-          out
-        }
-      val (cUOut, cUSec, cUStr, cULoad) =
-        bestOf("cc_driver") {
-          val out = ConnectedComponents.run(edges, driverThreshold = Long.MaxValue)
-            .localCheckpoint(true)
-          out.count()
-          out
-        }
-      val eq = cDOut.except(cUOut).isEmpty && cUOut.except(cDOut).isEmpty
-      val nComp = cDOut.select("component").distinct().count()
-      (cDSec, cDStr, cDLoad, cUSec, cUStr, cULoad, eq, nComp)
+      val cD = bestOf("cc_distributed") {
+        val out = ConnectedComponents.run(edges, driverThreshold = 0L)
+          .localCheckpoint(true)
+        out.count()
+        out
+      }
+      val cU = bestOf("cc_driver") {
+        val out = ConnectedComponents.run(edges, driverThreshold = Long.MaxValue)
+          .localCheckpoint(true)
+        out.count()
+        out
+      }
+      val eq = cD.value.except(cU.value).isEmpty && cU.value.except(cD.value).isEmpty
+      val nComp = cD.value.select("component").distinct().count()
+      (cD, cU, eq, nComp)
     }
 
     // --- driver-memory envelope of the broadcast path (untimed): build the
@@ -267,23 +184,22 @@ object ScaleGraph {
       (sArr.length.toLong, org.apache.spark.util.SizeEstimator.estimate(sArr))
     }
 
+    val timed = Seq("tri_shuffle" -> triShuffle, "tri_broadcast" -> triBroadcast,
+      "pr_shuffle" -> prShuffle, "pr_broadcast" -> prBroadcast,
+      "cc_dist" -> ccDist, "cc_driver" -> ccDriver)
     val metric = if (allPhases) "scale_graph" else "scale_graph_partial"
     println(s"""{"metric":"$metric","edges":$rawEdges,"edges_param":$edgesN,"nodes_param":$nodesN,""" +
       s""""distinct_und_edges":$distinctUnd,"vertices":$vertices,"max_degree":$maxDegree,""" +
-      s""""pr_iters":$prIters,"triangles":$triShuffle,""" +
-      s""""tri_shuffle_sec":$triShuffleSec,"tri_broadcast_sec":$triBroadcastSec,""" +
-      s""""pr_shuffle_sec":$prShuffleSec,"pr_broadcast_sec":$prBroadcastSec,""" +
+      s""""pr_iters":$prIters,"triangles":${triShuffle.value},""" +
+      s""""tri_shuffle_sec":${triShuffle.sec},"tri_broadcast_sec":${triBroadcast.sec},""" +
+      s""""pr_shuffle_sec":${prShuffle.sec},"pr_broadcast_sec":${prBroadcast.sec},""" +
       s""""pr_ckpt_cadence":$prCadenceJson,""" +
-      s""""cc_dist_sec":$ccDistSec,"cc_driver_sec":$ccDriverSec,""" +
+      s""""cc_dist_sec":${ccDist.sec},"cc_driver_sec":${ccDriver.sec},""" +
       s""""cc_components":$ccComponents,""" +
       s""""tri_paths_equal":${phases("tri")},"pr_paths_equal":$prEqual,"cc_paths_equal":$ccEqual,""" +
       s""""pr_driver_s_rows":$sRows,"pr_driver_s_bytes":$sBytes,""" +
-      s""""stragglers":{"tri_shuffle":$triShuffleStr,"tri_broadcast":$triBroadcastStr,""" +
-      s""""pr_shuffle":$prShuffleStr,"pr_broadcast":$prBroadcastStr,""" +
-      s""""cc_dist":$ccDistStr,"cc_driver":$ccDriverStr},""" +
-      s""""loads":{"tri_shuffle":$triShuffleLoad,"tri_broadcast":$triBroadcastLoad,""" +
-      s""""pr_shuffle":$prShuffleLoad,"pr_broadcast":$prBroadcastLoad,""" +
-      s""""cc_dist":$ccDistLoad,"cc_driver":$ccDriverLoad}}""")
+      s""""stragglers":${Record.obj(timed.map { case (k, s) => k -> s.straggler })},""" +
+      s""""loads":${Record.obj(timed.map { case (k, s) => k -> s.load })}}""")
     spark.stop()
   }
 }

@@ -1,10 +1,8 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.harness.Harness
 
 /** Off-toy scale proof for the time-series join operators: synthesize
   * `SCALE_EVENTS` click/view events over `SCALE_USERS` users with a
@@ -25,33 +23,8 @@ object ScaleJoins {
   def main(args: Array[String]): Unit = {
     val nEvents = sys.env.getOrElse("SCALE_EVENTS", "10000000").toLong
     val nUsers = sys.env.getOrElse("SCALE_USERS", "50000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // many-group TypedImperativeAggregates (top_k, kmv) must hash, not
-      // sort: the 128-group default silently degrades them (see graft.expr.TopK)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val durations = new ConcurrentLinkedQueue[(Int, Long)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        durations.add((te.stageId, te.taskInfo.duration)); ()
-      }
-    })
-    def straggler(): Double = {
-      val byStage = durations.toArray(Array.empty[(Int, Long)])
-        .groupBy(_._1).values.map(_.map(_._2).filter(_ >= 200).sorted)
-        .filter(_.length >= 8)
-      val r = if (byStage.isEmpty) 1.0
-        else byStage.map(ts => ts.last.toDouble / ts(ts.length / 2).toDouble).max
-      durations.clear()
-      r
-    }
+    val h = new Harness("scale_joins")
+    val spark = h.spark
 
     // deterministic event stream: ~1% of events land on hot user 0 (skew
     // probe), timestamps hash-scattered over ~30 days of microseconds
@@ -69,99 +42,90 @@ object ScaleJoins {
       .write.mode("overwrite").parquet(s"$work/events.parquet")
     val events = spark.read.parquet(s"$work/events.parquet")
     val total = events.count()
-    durations.clear()
 
     val clicks = events.filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"), col("ts_us"))
     val views = events.filter(col("event_type") === "view")
 
-    val t0 = System.nanoTime()
-    val asof = graft.ops.AsofJoin.asofLeft(
-      clicks.withColumnRenamed("click_id", "event_id"),
-      views.groupBy("user_id", "ts_us").agg(max("value").as("view_value")),
-      keys = Seq("user_id"), tsCol = "ts_us", valCols = Seq("view_value"))
-    val asofRows = asof.count()
-    val asofMatched = asof.filter(col("view_value").isNotNull).count()
-    val asofSec = (System.nanoTime() - t0) / 1e9
-    val asofStraggler = straggler()
+    val asof = h.bestOf("asof", samples = 1) {
+      val out = graft.ops.AsofJoin.asofLeft(
+        clicks.withColumnRenamed("click_id", "event_id"),
+        views.groupBy("user_id", "ts_us").agg(max("value").as("view_value")),
+        keys = Seq("user_id"), tsCol = "ts_us", valCols = Seq("view_value"))
+      (out.count(), out.filter(col("view_value").isNotNull).count())
+    }
+    val (asofRows, asofMatched) = asof.value
 
     // the same enrichment through the NATIVE sort-merge operator
     // (AsofJoinExec): identical semantics, so the row counts must agree —
     // the measured delta is pure execution-shape (no union padding, no
     // carry struct, no window buffer)
-    val tExec = System.nanoTime()
-    val asofExec = graft.plans.AsofJoinExec.asofLeft(
-      clicks.withColumnRenamed("click_id", "event_id"),
-      views.groupBy("user_id", "ts_us").agg(max("value").as("view_value")),
-      keys = Seq("user_id"), tsCol = "ts_us", valCols = Seq("view_value"))
-    val asofExecRows = asofExec.count()
-    val asofExecMatched = asofExec.filter(col("view_value").isNotNull).count()
-    val asofExecSec = (System.nanoTime() - tExec) / 1e9
-    val asofExecStraggler = straggler()
-    require(asofExecRows == asofRows && asofExecMatched == asofMatched,
+    val asofExec = h.bestOf("asof_exec", samples = 1) {
+      val out = graft.plans.AsofJoinExec.asofLeft(
+        clicks.withColumnRenamed("click_id", "event_id"),
+        views.groupBy("user_id", "ts_us").agg(max("value").as("view_value")),
+        keys = Seq("user_id"), tsCol = "ts_us", valCols = Seq("view_value"))
+      (out.count(), out.filter(col("view_value").isNotNull).count())
+    }
+    val (asofExecRows, asofExecMatched) = asofExec.value
+    require(asofExec.value == asof.value,
       s"native as-of diverged: $asofExecRows/$asofExecMatched vs $asofRows/$asofMatched")
 
     // top-5 events per user: the bounded-heap TopK aggregate vs the window
     // row_number idiom — same rows out; both are shuffle-bounded (the
     // window via WindowGroupLimit), so this measures the constant factors
     // (heap folds + interpreted struct eval vs codegen'd map-side sort)
-    val tTopkW = System.nanoTime()
-    val topkWindow = events
-      .withColumn("rn", org.apache.spark.sql.functions.row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("user_id")
-          .orderBy(col("value").desc, col("event_id").desc)))
-      .filter(col("rn") <= 5).select("user_id", "value", "event_id")
-    val topkWindowRows = topkWindow.count()
-    val topkWindowSec = (System.nanoTime() - tTopkW) / 1e9
-    val topkWindowStraggler = straggler()
+    val topkWindow = h.bestOf("topk_window", samples = 1) {
+      events
+        .withColumn("rn", org.apache.spark.sql.functions.row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy("user_id")
+            .orderBy(col("value").desc, col("event_id").desc)))
+        .filter(col("rn") <= 5).select("user_id", "value", "event_id")
+        .count()
+    }
 
-    val tTopkA = System.nanoTime()
-    val topkAgg = events.groupBy("user_id")
-      .agg(graft.expr.TopK(struct(col("value"), col("event_id")), 5).as("top"))
-      .select(col("user_id"), explode(col("top")).as("t"))
-      .select(col("user_id"), col("t.value"), col("t.event_id"))
-    val topkAggRows = topkAgg.count()
-    val topkAggSec = (System.nanoTime() - tTopkA) / 1e9
-    val topkAggStraggler = straggler()
-    require(topkAggRows == topkWindowRows,
-      s"topk agg diverged: $topkAggRows vs $topkWindowRows rows")
+    val topkAgg = h.bestOf("topk_agg", samples = 1) {
+      events.groupBy("user_id")
+        .agg(graft.expr.TopK(struct(col("value"), col("event_id")), 5).as("top"))
+        .select(col("user_id"), explode(col("top")).as("t"))
+        .select(col("user_id"), col("t.value"), col("t.event_id"))
+        .count()
+    }
+    require(topkAgg.value == topkWindow.value,
+      s"topk agg diverged: ${topkAgg.value} vs ${topkWindow.value} rows")
 
-    val t1 = System.nanoTime()
-    val ranged = graft.ops.RangeJoin.pointInRange(
-      clicks,
-      views.select(col("event_id").as("view_id"), col("user_id"),
-        col("ts_us").as("w_start"), (col("ts_us") + 60L * 1000000L).as("w_end")),
-      keys = Seq("user_id"), ptCol = "ts_us", startCol = "w_start", endCol = "w_end",
-      binWidth = 60L * 1000000L)
-    val rangeRows = ranged.count()
-    val rangeSec = (System.nanoTime() - t1) / 1e9
-    val rangeStraggler = straggler()
+    val range = h.bestOf("range", samples = 1) {
+      graft.ops.RangeJoin.pointInRange(
+        clicks,
+        views.select(col("event_id").as("view_id"), col("user_id"),
+          col("ts_us").as("w_start"), (col("ts_us") + 60L * 1000000L).as("w_end")),
+        keys = Seq("user_id"), ptCol = "ts_us", startCol = "w_start", endCol = "w_end",
+        binWidth = 60L * 1000000L).count()
+    }
 
     // the same attribution through the NATIVE active-set sort-merge
     // operator (RangeJoinExec): identical row set required — the delta is
     // execution shape (no interval expansion vs sweep-state merge)
-    val t2 = System.nanoTime()
-    val rangedExec = graft.plans.RangeJoinExec.pointInRange(
-      clicks,
-      views.select(col("event_id").as("view_id"), col("user_id"),
-        col("ts_us").as("w_start"), (col("ts_us") + 60L * 1000000L).as("w_end")),
-      keys = Seq("user_id"), ptCol = "ts_us", startCol = "w_start", endCol = "w_end",
-      valCols = Seq("view_id"))
-    val rangeExecRows = rangedExec.count()
-    val rangeExecSec = (System.nanoTime() - t2) / 1e9
-    val rangeExecStraggler = straggler()
-    require(rangeExecRows == rangeRows,
-      s"native range join diverged: $rangeExecRows vs $rangeRows rows")
+    val rangeExec = h.bestOf("range_exec", samples = 1) {
+      graft.plans.RangeJoinExec.pointInRange(
+        clicks,
+        views.select(col("event_id").as("view_id"), col("user_id"),
+          col("ts_us").as("w_start"), (col("ts_us") + 60L * 1000000L).as("w_end")),
+        keys = Seq("user_id"), ptCol = "ts_us", startCol = "w_start", endCol = "w_end",
+        valCols = Seq("view_id")).count()
+    }
+    require(rangeExec.value == range.value,
+      s"native range join diverged: ${rangeExec.value} vs ${range.value} rows")
 
     println(s"""{"metric":"scale_joins","events":$total,"users":$nUsers,""" +
-      s""""asof_sec":$asofSec,"asof_rows":$asofRows,"asof_matched":$asofMatched,""" +
-      s""""asof_exec_sec":$asofExecSec,""" +
-      s""""range_sec":$rangeSec,"range_rows":$rangeRows,""" +
-      s""""range_exec_sec":$rangeExecSec,""" +
-      s""""topk_window_sec":$topkWindowSec,"topk_agg_sec":$topkAggSec,"topk_rows":$topkAggRows,""" +
-      s""""stragglers":{"asof":$asofStraggler,"asof_exec":$asofExecStraggler,"range":$rangeStraggler,""" +
-      s""""range_exec":$rangeExecStraggler,""" +
-      s""""topk_window":$topkWindowStraggler,"topk_agg":$topkAggStraggler}}""")
+      s""""asof_sec":${asof.sec},"asof_rows":$asofRows,"asof_matched":$asofMatched,""" +
+      s""""asof_exec_sec":${asofExec.sec},""" +
+      s""""range_sec":${range.sec},"range_rows":${range.value},""" +
+      s""""range_exec_sec":${rangeExec.sec},""" +
+      s""""topk_window_sec":${topkWindow.sec},"topk_agg_sec":${topkAgg.sec},"topk_rows":${topkAgg.value},""" +
+      s""""stragglers":{"asof":${asof.straggler},"asof_exec":${asofExec.straggler},"range":${range.straggler},""" +
+      s""""range_exec":${rangeExec.straggler},""" +
+      s""""topk_window":${topkWindow.straggler},"topk_agg":${topkAgg.straggler}}}""")
     spark.stop()
   }
 }

@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+
+import graft.harness.{Harness, Record}
 
 /** Off-toy scale proof for the Structured Streaming pillar: drain a 10 M-event
   * backlog through the SAME transforms the oracle-checked queries use
@@ -38,28 +40,6 @@ object ScaleStream {
   private def peakState(q: StreamingQuery): Long =
     q.recentProgress.flatMap(p => p.stateOperators.map(_.numRowsTotal)).foldLeft(0L)(math.max)
 
-  private def loadavg(): Double =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ").head.toDouble
-    catch { case _: Throwable => -1.0 }
-
-  /** Per-PHASE load gate (same discipline as Bench's per-sample gate): the
-    * harness runs long enough that a single gate at process start cannot
-    * vouch for the later phases — observed 3× swings on the same phase
-    * between back-to-back runs. Bounded wait, and the load each phase
-    * actually started under is stamped into its JSON block. */
-  private def gateOnLoad(tag: String): Double = {
-    val gate = sys.env.get("SCALE_PHASE_GATE").map(_.toDouble).getOrElse(8.0)
-    var l = loadavg()
-    var tries = 0
-    while (l > gate && tries < 12) {
-      System.err.println(f"[scale_stream][gate] $tag load=$l%.2f > $gate%.1f, waiting 20s")
-      Thread.sleep(20000)
-      tries += 1
-      l = loadavg()
-    }
-    l
-  }
-
   private def batches(q: StreamingQuery): Int =
     q.recentProgress.count(_.numInputRows > 0)
 
@@ -68,13 +48,8 @@ object ScaleStream {
     val nUsers = sys.env.getOrElse("SCALE_USERS", "50000").toLong
     val nFiles = 64
     val filesPerTrigger = 16 // => 4 micro-batches for the multi-batch phases
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val h = new Harness("scale_stream")
+    val spark = h.spark
 
     val work = java.nio.file.Files.createTempDirectory("graft_scale_stream")
     TempCleanup.deleteOnExit(work)
@@ -103,11 +78,8 @@ object ScaleStream {
       r.parquet(s"$work/events")
     }
 
-    val phaseLoads = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def drainOnce(name: String, out: DataFrame, mode: String): (Double, StreamingQuery, Long, Double) = {
-      val load = gateOnLoad(name)
+    def drainOnce(out: DataFrame, mode: String): (Long, StreamingQuery) = {
       var sink = 0L
-      val t0 = System.nanoTime()
       val q = out.writeStream
         .outputMode(mode)
         .foreachBatch { (df: DataFrame, _: Long) =>
@@ -121,10 +93,8 @@ object ScaleStream {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      val sec = (System.nanoTime() - t0) / 1e9
       spark.streams.resetTerminated()
-      System.err.println(f"[scale_stream] $name sample $sec%.1fs load=$load%.2f")
-      (sec, q, sink, load)
+      (sink, q)
     }
 
     // Per-phase min-of-K (default 2): this box's co-tenant bursts (1-min load
@@ -134,15 +104,9 @@ object ScaleStream {
     // counts are deterministic and asserted equal across samples; only the
     // clock varies, so min is the clean-window estimator. phase_loads keeps
     // the load of the sample that WON.
-    val phaseSamples = sys.env.get("SCALE_PHASE_SAMPLES").map(_.toInt).getOrElse(2)
-    require(phaseSamples >= 1, s"SCALE_PHASE_SAMPLES must be >= 1, got $phaseSamples")
     def drain(name: String, out: => DataFrame, mode: String): (Double, StreamingQuery, Long) = {
-      val runs = (1 to phaseSamples).map { _ => drainOnce(name, out, mode) }
-      require(runs.map(_._3).distinct.size == 1,
-        s"$name sink count varies across samples: ${runs.map(_._3)}")
-      val winner = runs.minBy(_._1)
-      phaseLoads(name) = winner._4
-      (winner._1, winner._2, winner._3)
+      val win = h.bestOf(name, same = { case (rows, _) => rows })(drainOnce(out, mode))
+      (win.sec, win.value._2, win.value._1)
     }
 
     // 1) watermarked tumbling-window aggregate, 4 micro-batches
@@ -246,9 +210,8 @@ object ScaleStream {
       s"stream interval join diverged from batch range join: $joinRows vs $batchJoinRows")
 
     def rate(sec: Double): Long = math.round(total / sec)
-    val loadsJson = phaseLoads.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     println(s"""{"metric":"scale_stream","events":$total,"users":$nUsers,""" +
-      s""""phase_loads":$loadsJson,""" +
+      s""""phase_loads":${Record.obj(h.loads)},""" +
       s""""windowed":{"drain_sec":$winSec,"batches":${batches(winQ)},""" +
       s""""rows_per_sec":${rate(winSec)},"state_rows_peak":${peakState(winQ)},""" +
       s""""result_rows":$winRows},""" +

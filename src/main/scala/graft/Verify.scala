@@ -1,24 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.harness.{Record, Session, cpus}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // many-group TypedImperativeAggregates (top_k, kmv) must hash, not
-      // sort: the 128-group default silently degrades them (see graft.expr.TopK)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "262144")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
+    val spark = Session.profile(cpus)
     // comma-separated query-name filter for local iteration (the driver
     // runs unfiltered); oracle_sql.json is always dumped in full
     val only = sys.env.get("GRAFT_VERIFY_ONLY")
@@ -32,30 +21,25 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // symmetrized-bench companion (setup tables + timed overrides) so
-    // tools/check.py --bench-sql can pin override ≡ original without a
-    // bench run
+    dumpOracleSql(outDir)
+    spark.stop()
+  }
+
+  /** Write SparkEntry.oracleSql as oracle_sql.json, plus its
+    * symmetrized-bench companion oracle_bench_sql.json (setup tables +
+    * timed overrides), so tools/check.py --bench-sql can pin override ≡
+    * original without a bench run and tools/oracle_bench.py never runs a
+    * stale statement set. */
+  def dumpOracleSql(outDir: String): Unit = {
+    import Record.quote
+    Files.createDirectories(Paths.get(outDir))
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Record.obj(SparkEntry.oracleSql.toSeq.sortBy(_._1).map { case (k, v) => k -> quote(v) }))
     val setup = SparkEntry.oracleSetupSql
-      .map { case (t, sql) => s"[${q(t)}, ${q(sql)}]" }.mkString("[", ",", "]")
-    val timed = SparkEntry.oracleBenchSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (t, sql) => s"[${quote(t)}, ${quote(sql)}]" }.mkString("[", ",", "]")
+    val timed = Record.obj(SparkEntry.oracleBenchSql.toSeq.sortBy(_._1).map { case (k, v) => k -> quote(v) })
     Files.writeString(Paths.get(s"$outDir/oracle_bench_sql.json"),
       s"""{"setup": $setup, "timed": $timed}""")
-    spark.stop()
+    ()
   }
 }

@@ -54,7 +54,11 @@ class EtlGroup(
     * `inDbIntermediates` wrong for fan-out DAGs does not exist here. This is
     * the safe InDb subset for DAGs that mix single-consumer hand-offs
     * (extraction → grouping) with multi-consumer ones (grouping → validators
-    * + export + result), e.g. the metagraph pipeline. */
+    * + export + result), e.g. the metagraph pipeline.
+    *
+    * Caveat: this counts consuming units, not plan references. A sole
+    * consumer that references the id twice (a self-join, say) recomputes
+    * the producer when the id is composed lazily. */
   def singleConsumerIntermediateIds: Seq[String] = {
     val consumerCount = units.flatMap(_.inputIds.distinct)
       .groupBy(identity).map { case (id, xs) => id -> xs.size }

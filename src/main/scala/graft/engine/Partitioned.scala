@@ -64,21 +64,4 @@ object Partitioned {
   /** Reference `EfficientMerge`/`PyArrowMerge`/... (parallize.py:201-270): UNION ALL. */
   def merge(dfs: Seq[DataFrame]): DataFrame =
     dfs.reduce(_.unionByName(_))
-
-  /** Skew-defeating equi-join: salt the (large, skewed) left side into
-    * `saltFactor` deterministic sub-keys and replicate the right side across
-    * them, so one hot key spreads over `saltFactor` tasks instead of one
-    * straggler. Semantically identical to `left.join(right, keys)`. AQE's
-    * skew-join handles sort-merge cases adaptively; explicit salting is for
-    * planned-ahead hot keys and broadcast-averse shapes. Salt is derived from
-    * the left row's whole content (xxhash64), so results are deterministic. */
-  def saltedJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
-                 saltFactor: Int): DataFrame = {
-    val leftCols = left.columns
-    val salted = left.withColumn("__salt",
-      pmod(xxhash64(leftCols.map(col): _*), lit(saltFactor)))
-    val replicated = right.withColumn("__salt",
-      explode(sequence(lit(0L), lit((saltFactor - 1).toLong))))
-    salted.join(replicated, keys :+ "__salt").drop("__salt")
-  }
 }

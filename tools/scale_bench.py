@@ -480,6 +480,10 @@ def merge_flagship_points(keep, other):
     by_copies = {p["copies"]: p for p in other.get("points", [])}
     for p in keep.get("points", [])[:-1]:
         o = by_copies.get(p["copies"])
+        # A point whose graph_rows is missing (on either side) is deliberately
+        # NOT folded: equal row counts are the only proof that both runs
+        # measured the same workload, and without them a faster foreign time
+        # could come from a different corpus.
         if o and "total_sec" in o and "result_sec" in o \
                 and o.get("graph_rows") is not None \
                 and o["graph_rows"] == p.get("graph_rows") \
